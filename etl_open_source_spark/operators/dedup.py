@@ -116,7 +116,6 @@ def word_shingles(
     text_col: str,
     n: int = 3,
     max_doc_freq: int | None = None,
-    persist: bool = False,
 ) -> DataFrame:
     """Distinct word n-gram shingles: (id, shingle) with the shingle as a
     64-bit xxhash64 of its n words — the n-gram string is never built
@@ -129,20 +128,8 @@ def word_shingles(
     ``max_doc_freq`` drops shingles appearing in more than that many docs
     — the skew guard for the inverted-index join (a shingle in 1M docs
     creates 10^12 join rows); pairs sharing ONLY ultra-common shingles are
-    then missed, by design.
-
-    ``persist=True`` caches the PRE-cap explode: the hot-list aggregate and
-    every downstream consumer (self-join sides, size counts) then read the
-    cached rows instead of re-scanning + re-shingling the corpus — with the
-    cap this halves the corpus passes (the old shape persisted the POST-cap
-    frame, whose one materialization ran the explode twice: once for the
-    hot-list build, once for the anti-join's left side). The returned
-    capped frame itself stays lazy — the anti-join is a broadcast hash
-    probe per cached row, far cheaper than a second cache. Callers own the
-    session-lifetime cache exactly as they did with their own persist()."""
+    then missed, by design."""
     out = shingle_positions(df, id_col, text_col, n, distinct=True)
-    if persist:
-        out = owned_persist(out)
     if max_doc_freq is not None:
         # The hot list is |{shingles with df > cap}| — tiny by construction
         # (bounded by corpus_size/cap) — so broadcast it: the anti-join then
@@ -159,28 +146,7 @@ def word_shingles(
     return out
 
 
-def _jaccard_on_pairs(pairs: DataFrame, shingles: DataFrame) -> DataFrame:
-    """Exact Jaccard for given candidate (id_a, id_b) pairs."""
-    sizes = shingles.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    sa = shingles.select(F.col("id").alias("id_a"), F.col("shingle"))
-    sb = shingles.select(F.col("id").alias("id_b"), F.col("shingle"))
-    inter = (
-        pairs.join(sa, "id_a")
-        .join(sb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return (
-        inter.join(sizes.withColumnsRenamed({"id": "id_a", "n": "n_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({"id": "id_b", "n": "n_b"}), "id_b")
-        .withColumn(
-            "jaccard", F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-        )
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-# ------------------------------------------------- exact n-gram Jaccard
+# ------------------------------------------------ per-doc shingle arrays
 
 
 def _capped_doc_arrays(
@@ -215,6 +181,134 @@ def _capped_doc_arrays(
     )
 
 
+def _sorted_doc_arrays(
+    df: DataFrame, id_col: str, text_col: str, n: int, max_doc_freq: int | None
+) -> DataFrame:
+    """(id, arr): each doc's distinct shingles sorted by hash value, capped
+    by ``max_doc_freq`` when set. Uncapped, the arrays are SCAN-LOCAL: no
+    explode, no groupBy — the only exchanges left are the candidate
+    join's own."""
+    if max_doc_freq is not None:
+        return _capped_doc_arrays(df, id_col, text_col, n, max_doc_freq)
+    return word_shingle_arrays(df, id_col, text_col, n).select(
+        "id", F.sort_array("shingles").alias("arr")
+    )
+
+
+# ------------------------------------- prefix-filter set-similarity join
+
+
+def _prefix_candidates(
+    docs: DataFrame, frac: float, prefix_to_full: bool
+) -> tuple[DataFrame, DataFrame]:
+    """Candidate step of the prefix-filter set-similarity join
+    (AllPairs/PPJoin: Bayardo et al., Xiao et al.) behind n-gram Jaccard,
+    n-gram containment and neighbour-set link prediction.
+
+    ``docs`` is (id, arr, …carried columns) with ``arr`` sorted and
+    distinct. Returns ``(indexed, cand)``: ``indexed`` is ``docs`` plus
+    ``n = size(arr)`` and the prefix, persisted — verify against it with
+    :func:`_verify_pairs`; ``cand`` is the distinct (id_a, id_b) candidate
+    pairs — a SUPERSET of every pair whose overlap reaches ``frac`` of the
+    set that owns the prefix — each unordered pair once: id_a < id_b for
+    prefix ⋈ prefix, id_a the smaller set for smaller prefix ⋈ larger full.
+
+    Prefix lemma: if |a∩b| ≥ f·|x| for a set x ∈ {a, b}, the SMALLEST
+    shared element (in the global sort order — any total order works, and
+    the hash/id order is free) lies within x's first |x| − ⌈f·|x|⌉ + 1
+    elements: otherwise every shared element sits among x's last
+    ⌈f·|x|⌉ − 1 and |a∩b| < f·|x|. The caller turns its measure into f:
+
+    - ``prefix_to_full=False`` (prefix ⋈ prefix): the bound holds for
+      BOTH sets, so indexing each set's prefix and equi-joining prefixes
+      finds the pair. Jaccard: J ≥ t ⇒ |a∩b| ≥ t·max(|a|,|b|), f = t.
+    - ``prefix_to_full=True`` (smaller prefix ⋈ larger full): the bound
+      holds only for the SMALLER set x (ties by id), so x's prefix joins
+      the other set's FULL array. Containment C(src→dst) ≥ t ⇒ |a∩b| ≥
+      t·n_src ≥ t·min(n_a, n_b), f = t — a tiny doc can sit in any suffix
+      of a huge one, so the larger side gets no prefix. Graph Jaccard
+      J ≥ t ⇒ common ≥ (t/(1+t))·(deg_a + deg_b) ≥ (2t/(1+t))·n_small,
+      f = 2t/(1+t), with n ≤ deg.
+
+    ⌈f·n⌉ must never round UP past the exact value — that would SHORTEN a
+    prefix and could drop a boundary pair — so an epsilon is subtracted
+    first: an FP product like 3.0000000000000004 still ceils to 3, while a
+    true non-integer product keeps its ceil or lengthens the prefix by one
+    (a larger superset, still exact). The epsilon may only ever LENGTHEN a
+    prefix. It is SIZE-RELATIVE (1e-9 + n·1e-15): f·n's FP error is
+    ~n·2⁻⁵³, so a constant alone could under-guard sets beyond ~10⁷
+    elements (ADVICE r12)."""
+    indexed = owned_persist(
+        docs.select(
+            "*",
+            F.size("arr").alias("n"),
+            F.expr(
+                f"slice(arr, 1, size(arr) - CAST(CEIL({frac} * size(arr)"
+                f" - 1e-9 - size(arr) * 1e-15) AS INT) + 1)"
+            ).alias("prefix"),
+        )
+    )
+    if not prefix_to_full:
+        pref = indexed.select("id", F.explode("prefix").alias("shingle"))
+        cand = (
+            pref.select(F.col("id").alias("id_a"), "shingle")
+            .join(pref.select(F.col("id").alias("id_b"), "shingle"), "shingle")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+        )
+        return indexed, cand.distinct()
+    pref = indexed.select("id", "n", F.explode("prefix").alias("shingle"))
+    full = indexed.select("id", "n", F.explode("arr").alias("shingle"))
+    cand = (
+        pref.select(F.col("id").alias("id_a"), F.col("n").alias("n_a"), "shingle")
+        .join(
+            full.select(F.col("id").alias("id_b"), F.col("n").alias("n_b"), "shingle"),
+            "shingle",
+        )
+        .filter(
+            (F.col("n_a") < F.col("n_b"))
+            | ((F.col("n_a") == F.col("n_b")) & (F.col("id_a") < F.col("id_b")))
+        )
+        .select("id_a", "id_b")
+    )
+    return indexed, cand.distinct()
+
+
+def _verify_pairs(pairs: DataFrame, docs: DataFrame, *carried: str) -> DataFrame:
+    """Verify step: join (id_a, id_b) pairs back to both sides' arrays in
+    ``docs`` (id, arr, …) and add the exact overlap ``inter = |a∩b|``.
+    Each ``carried`` column rides along as ``<col>_a`` / ``<col>_b``.
+    One array_intersect per pair — no per-pair count aggregate, no
+    shuffle of the pair multiset."""
+
+    def side(s: str) -> DataFrame:
+        return docs.select(
+            F.col("id").alias(f"id_{s}"),
+            F.col("arr").alias(f"__arr_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carried],
+        )
+
+    return (
+        pairs.join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+        .withColumn("inter", F.size(F.array_intersect("__arr_a", "__arr_b")))
+    )
+
+
+def _jaccard_at_least(verified: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) of verified pairs with jaccard >= threshold."""
+    return (
+        verified.withColumn(
+            "jaccard", F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+# ------------------------------------------------- exact n-gram Jaccard
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -223,89 +317,24 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
-    """All pairs with word-n-gram Jaccard >= threshold, computed exactly
-    from the inverted index (shingle → sorted posting list). The exact
-    baseline the probabilistic methods are judged against.
-
-    Plan (r12): PREFIX-FILTERED inverted-index self-join (AllPairs/PPJoin,
-    Bayardo et al. / Xiao et al.) — exact, with far fewer candidate pairs
-    than the plain posting self-join:
-
-    1. Per-doc shingle ARRAYS, sorted by the 64-bit hash value (any global
-       total order satisfies the prefix lemma; the hash order is free —
-       no doc-frequency join needed).
-    2. Prefix lemma: J(a,b) >= t implies |a∩b| >= t·max(|a|,|b|), so the
-       SMALLEST shared token (in the global order) must sit within the
-       first |x| - ⌈t·|x|⌉ + 1 tokens of BOTH docs (if it didn't for x,
-       every shared token would be among x's last ⌈t·|x|⌉ - 1 tokens and
-       |a∩b| < t·|x| — contradiction). So indexing only each doc's prefix
-       and equi-joining prefixes yields a candidate SUPERSET of all
-       qualifying pairs.
-    3. Exact verify per candidate: join the two doc arrays back and count
-       |a∩b| with array_intersect — no per-pair count aggregation, no
-       shuffle of the full pair multiset.
+    """All pairs with word-n-gram Jaccard >= threshold — exact, the
+    baseline the probabilistic methods are judged against. Prefix ⋈
+    prefix candidates at f = threshold, then the array verify (see
+    :func:`_prefix_candidates`).
 
     [Measured at sf0.1 (5000 docs, 260k shingle rows over 27k distinct
-    shingles): the plain self-join emitted 1.27M pair rows into a 1.13M-
-    group count aggregate (map-side agg compressed ~nothing) — 1.7 s of
-    the query; the prefix join emits 430k candidate rows / 409k distinct
-    pairs and the array verify replaces the pair shuffle: warm-cache
-    1.37 s → 1.01 s, identical 256 output pairs. The candidate reduction
-    is also the published 100 TB story for exact all-pairs similarity —
-    the quadratic term shrinks by the prefix-fraction² on every posting.
-    Earlier measured notes still hold: the cap rides the broadcast
-    anti-join; the pre-cap explode persists via word_shingles so the
-    corpus is scanned once, not once per consumer.]
+    shingles): the plain posting self-join emitted 1.27M pair rows into a
+    1.13M-group count aggregate; the prefix join emits 430k candidate rows
+    / 409k distinct pairs and the array verify replaces the pair shuffle:
+    warm-cache 1.37 s → 1.01 s, identical 256 output pairs (r12).]
 
-    ``max_doc_freq`` bounds every posting list via the upstream broadcast
-    anti-join; without a cap the candidate join is O(Σ prefix-postings²)
-    by design (verification baseline only)."""
-    if max_doc_freq is None:
-        # no cap → the doc sets are computable SCAN-LOCALLY: no explode, no
-        # groupBy — the only exchanges left are the candidate join's own
-        docs_base = word_shingle_arrays(df, id_col, text_col, n).select(
-            "id", F.sort_array("shingles").alias("arr")
-        )
-    else:
-        docs_base = _capped_doc_arrays(df, id_col, text_col, n, max_doc_freq)
-    # ceil(t·n) must never round UP past the exact value (that would
-    # SHORTEN the prefix and could drop a boundary pair): subtract an
-    # epsilon so an FP product like 3.0000000000000004 still ceils to 3;
-    # a true non-integer product keeps its ceil (or lengthens the prefix
-    # by one — a superset, still exact). The epsilon is SIZE-RELATIVE
-    # (1e-9 + n·1e-15): t·n's FP error is ~n·2⁻⁵³, so a constant epsilon
-    # alone could under-guard docs beyond ~10⁷ shingles (ADVICE r12).
-    docs = (
-        docs_base
-        .select(
-            "id",
-            "arr",
-            F.size("arr").alias("n"),
-            F.expr(
-                f"slice(arr, 1, size(arr) - CAST(CEIL({threshold} * size(arr)"
-                f" - 1e-9 - size(arr) * 1e-15) AS INT) + 1)"
-            ).alias("prefix"),
-        )
+    ``max_doc_freq`` bounds every posting list (array-side cap, see
+    :func:`_capped_doc_arrays`); without a cap the candidate join is
+    O(Σ prefix-postings²) by design (verification baseline only)."""
+    docs, cand = _prefix_candidates(
+        _sorted_doc_arrays(df, id_col, text_col, n, max_doc_freq), threshold, False
     )
-    docs = owned_persist(docs)
-    pref = docs.select("id", F.explode("prefix").alias("shingle"))
-    cand = (
-        pref.select(F.col("id").alias("id_a"), "shingle")
-        .join(pref.select(F.col("id").alias("id_b"), "shingle"), "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    da = docs.select(F.col("id").alias("id_a"), F.col("arr").alias("__arr_a"), F.col("n").alias("n_a"))
-    db = docs.select(F.col("id").alias("id_b"), F.col("arr").alias("__arr_b"), F.col("n").alias("n_b"))
-    return (
-        cand.join(da, "id_a")
-        .join(db, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("__arr_a", "__arr_b")))
-        .withColumn("jaccard", F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_at_least(_verify_pairs(cand, docs, "n"), threshold)
 
 
 # ---------------------------------------------------------- MinHash+LSH
@@ -361,7 +390,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    max_doc_freq: int | None = None,
     max_bucket_size: int | None = 1000,
 ) -> DataFrame:
     """Near-dup pairs via MinHash banding, then EXACT Jaccard verification
@@ -388,42 +416,17 @@ def minhash_lsh_pairs(
     identical docs collapse to one representative and never form such
     buckets. Pairs discoverable ONLY through an over-cap bucket are
     missed by design."""
-    if max_doc_freq is not None:
-        # capped variant (tests/robustness): the doc-frequency drop needs
-        # the exploded view for its global count, so this path keeps the
-        # persisted inverted index and the posting-join verify
-        sh = word_shingles(df, id_col, text_col, n, max_doc_freq, persist=True)
-        sig = minhash_signatures(sh, num_hashes)
-        candidates = lsh_candidate_pairs(sig, num_hashes, bands, max_bucket_size)
-        return _jaccard_on_pairs(candidates, sh).filter(F.col("jaccard") >= threshold)
-    # Production path (r12): persist per-doc shingle ARRAYS (scan-local to
-    # build — no explode, no groupBy), derive the exploded view for the
-    # signature aggregate by a scan-local explode off the cache, and verify
-    # candidates with array_intersect on the two doc arrays. Removes two
-    # full exchanges vs the old exploded pipeline (the sizes groupBy(id)
-    # and the per-pair intersection count groupBy) and shrinks the cache
-    # from one row per (doc, shingle) to one row per doc. Jaccard values
-    # identical: |a∩b| over distinct sets either way.
+    # One persisted row per doc (scan-local to build): the signature
+    # aggregate explodes off this cache and the verify reads the same
+    # arrays, so the corpus is shingled once.
     docs = owned_persist(word_shingle_arrays(df, id_col, text_col, n))
     sh = docs.select("id", F.explode("shingles").alias("shingle"))
     sig = minhash_signatures(sh, num_hashes)
     candidates = lsh_candidate_pairs(sig, num_hashes, bands, max_bucket_size)
-    da = docs.select(
-        F.col("id").alias("id_a"), F.col("shingles").alias("__arr_a"),
-        F.size("shingles").alias("n_a"),
+    arrays = docs.select(
+        "id", F.col("shingles").alias("arr"), F.size("shingles").alias("n")
     )
-    db = docs.select(
-        F.col("id").alias("id_b"), F.col("shingles").alias("__arr_b"),
-        F.size("shingles").alias("n_b"),
-    )
-    return (
-        candidates.join(da, "id_a")
-        .join(db, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("__arr_a", "__arr_b")))
-        .withColumn("jaccard", F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_at_least(_verify_pairs(candidates, arrays, "n"), threshold)
 
 
 def lsh_candidate_pairs(
@@ -786,73 +789,14 @@ def ngram_containment_pairs(
     |src|/|dst| ≈ 0, so resemblance dedup never sees it; containment is
     the quote/boilerplate/subset detector (Broder's original distinction).
 
-    Plan (r13): ASYMMETRIC prefix filter — the one-sided variant of the
-    Jaccard path's AllPairs/PPJoin (Bayardo et al.; Xiao et al.):
-
-    1. Per-doc sorted shingle arrays (scan-local when uncapped; one
-       groupBy off the persisted capped index otherwise), exactly as in
-       :func:`ngram_jaccard_pairs`.
-    2. Lemma: a directed pair with C(src→dst) ≥ t has |a∩b| ≥ t·n_src ≥
-       t·min(n_a, n_b), so the SMALLER doc x (ties broken by id) must
-       share a token within its first n_x − ⌈t·n_x⌉ + 1 tokens — but the
-       larger doc gets NO prefix bound from containment (a tiny doc can
-       be contained in any suffix of a huge one). Hence the candidate
-       join is smaller-doc PREFIX ⋈ larger-doc FULL list — strictly
-       fewer candidate rows than the old full ⋈ full posting self-join,
-       and no per-pair count aggregate at all.
-    3. Exact verify per candidate with ``array_intersect`` on the two doc
-       arrays; both directed rows divide the one intersection by their
-       own source size.
-
-    The ⌈t·n⌉ epsilon is size-relative (1e-9 + n·1e-15): the FP error of
-    t·n is ~n·2⁻⁵³, so an absolute epsilon alone could shorten a prefix
-    for docs beyond ~10⁷ shingles (ADVICE r12) — the guard may only ever
-    LENGTHEN a prefix (superset stays exact).
-
-    ``max_doc_freq`` bounds every posting list via the upstream broadcast
-    anti-join exactly as in the Jaccard path."""
-    if max_doc_freq is None:
-        docs_base = word_shingle_arrays(df, id_col, text_col, n).select(
-            "id", F.sort_array("shingles").alias("arr")
-        )
-    else:
-        docs_base = _capped_doc_arrays(df, id_col, text_col, n, max_doc_freq)
-    docs = docs_base.select(
-        "id",
-        "arr",
-        F.size("arr").alias("n"),
-        F.expr(
-            f"slice(arr, 1, size(arr) - CAST(CEIL({threshold} * size(arr)"
-            f" - 1e-9 - size(arr) * 1e-15) AS INT) + 1)"
-        ).alias("prefix"),
+    Smaller-prefix ⋈ larger-full candidates at f = threshold, then the
+    array verify (see :func:`_prefix_candidates`); both directed rows
+    divide the one intersection by their own source size.
+    ``max_doc_freq`` caps posting lists exactly as in the Jaccard path."""
+    docs, cand = _prefix_candidates(
+        _sorted_doc_arrays(df, id_col, text_col, n, max_doc_freq), threshold, True
     )
-    docs = owned_persist(docs)
-    pref = docs.select("id", "n", F.explode("prefix").alias("shingle"))
-    full = docs.select("id", "n", F.explode("arr").alias("shingle"))
-    cand = (
-        pref.select(F.col("id").alias("id_a"), F.col("n").alias("n_a"), "shingle")
-        .join(
-            full.select(F.col("id").alias("id_b"), F.col("n").alias("n_b"), "shingle"),
-            "shingle",
-        )
-        .filter(
-            (F.col("n_a") < F.col("n_b"))
-            | ((F.col("n_a") == F.col("n_b")) & (F.col("id_a") < F.col("id_b")))
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    da = docs.select(
-        F.col("id").alias("id_a"), F.col("arr").alias("__arr_a"), F.col("n").alias("n_a")
-    )
-    db = docs.select(
-        F.col("id").alias("id_b"), F.col("arr").alias("__arr_b"), F.col("n").alias("n_b")
-    )
-    inter = (
-        cand.join(da, "id_a")
-        .join(db, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("__arr_a", "__arr_b")))
-    )
+    inter = _verify_pairs(cand, docs, "n")
     directed = inter.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst"), "inter",
         F.col("n_a").alias("n"),

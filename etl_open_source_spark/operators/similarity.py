@@ -230,6 +230,23 @@ def _prunable_id_type(dt) -> bool:
     return isinstance(dt, (ByteType, ShortType, IntegerType, LongType, StringType))
 
 
+def _topk_keep_mask(sims, valid, K: int, slack: float):
+    """Map-side top-k prune mask over a (corpus × query) sim matrix: keep
+    every row whose raw sim is within ``slack`` of each query's K-th best.
+    Invalid (NULL) sims key as +inf and are never the best. NaN sims key
+    as -inf: Spark orders NaN above every number, so under sim DESC a NaN
+    row ranks first — it is always kept, and it takes one of the K best
+    slots when the threshold is picked (np.partition would otherwise sort
+    it last and, with fewer than K numeric rows, make the threshold NaN)."""
+    import numpy as np
+
+    key = np.negative(sims)
+    key[np.isnan(key)] = -np.inf
+    key[~valid] = np.inf
+    thr = np.partition(key, K - 1, axis=0)[K - 1, :]
+    return key <= (thr[None, :] + slack)
+
+
 def _brute_force_scores(
     q: DataFrame,
     c: DataFrame,
@@ -277,7 +294,8 @@ def _brute_force_scores(
       so at most K-1 batch rows can have raw sim > raw(r) + slack (a raw
       gap above 10^-decimals forces a strictly greater rounded value);
     - hence raw(r) ≥ (K-th best raw) − slack and the threshold keeps it;
-      rounding-tie bands and NULL sims (threshold +inf) are kept whole.
+      rounding-tie bands and NULL sims (threshold +inf) are kept whole,
+      and so are NaN sims, which the downstream DESC order ranks first.
 
     Only enabled when both id types are integer/string (Arrow multiplicity
     counts provably match Spark `=` semantics — see _prunable_id_type);
@@ -405,9 +423,7 @@ def _brute_force_scores(
                     mult = int(mx) if mx is not None else 0
                 K = keep_top + mult + kept_ids.null_count
                 if nc > K:
-                    key = np.where(valid, -sims, np.inf)
-                    thr = np.partition(key, K - 1, axis=0)[K - 1, :]
-                    keep = key <= (thr[None, :] + keep_slack)
+                    keep = _topk_keep_mask(sims, valid, K, keep_slack)
                     rows_i, cols_i = np.nonzero(keep)
                     yield pa.RecordBatch.from_arrays(
                         [

@@ -770,8 +770,8 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed partial-duplicate pairs by word-3-gram CONTAINMENT
     (|A∩B|/|A| >= 0.6) — the asymmetric quote/subset detector Jaccard
     resemblance structurally misses (a short doc quoted inside a long one
-    has C ≈ 1 but Jaccard ≈ |A|/|B| ≈ 0). Same single inverted-index
-    self-join as q_dedup_ngram (each unordered intersection computed
+    has C ≈ 1 but Jaccard ≈ |A|/|B| ≈ 0). Same prefix-filter join and
+    array verify as q_dedup_ngram (each unordered intersection computed
     once, both directions emitted by a cheap union), same max_doc_freq
     posting cap; exact values, so the oracle matches bit-for-bit."""
     d = load_table(spark, sf_dir, "documents")
@@ -797,7 +797,8 @@ def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical min-label fixpoint, so the driver value-hash proves the
     exotic algorithm against the simple one's oracle. Convergence is
     detected by an edge-set checksum going stable; per-round
-    localCheckpoint truncates lineage (operators/dedup.py:401)."""
+    localCheckpoint truncates lineage
+    (operators/dedup.py::connected_components_star)."""
     d = load_table(spark, sf_dir, "documents")
     pairs = D.ngram_jaccard_pairs(
         d, "doc_id", "text", n=3, threshold=0.5, max_doc_freq=100

@@ -1,14 +1,15 @@
-"""Dump .explain('formatted') for registered queries → plans/r12/.
+"""Dump .explain('formatted') for registered queries → plans/<round>/.
 
 Usage:
-    python scripts/r12_plan_dump.py before q_dedup_ngram q_sim_topk ...
-    python scripts/r12_plan_dump.py after  q_dedup_ngram
-    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python scripts/r12_plan_dump.py before --all-bench
+    python scripts/plan_dump.py r13 before q_dedup_ngram q_sim_topk ...
+    python scripts/plan_dump.py r13 after  q_dedup_ngram
+    SPARK_GRAFT_SF_DIR=<fixture dir> python scripts/plan_dump.py r12 before --all-bench
 
-The optimization-round judge reads plans/r12/<query>_{before,after}.txt and
-checks plan claims (Exchange counts, join strategies, PushedFilters,
-BatchEvalPython nodes) against them — this script is how those files are
-produced, so the evidence is reproducible.
+Writes plans/<round>/<query>_{before,after}.txt. Plan claims (Exchange
+counts, join strategies, PushedFilters, BatchEvalPython nodes) are
+checked against those files — this script is how they are produced, so
+the evidence is reproducible. To compare two commits, run the script
+from each checkout with the same round name.
 
 Queries whose fn eagerly runs jobs while building the DataFrame (iterative
 CC, KMeans fits, sink round-trips) still work here: the explain captures
@@ -20,15 +21,17 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:]]
-    if not args or args[0] not in ("before", "after"):
-        raise SystemExit("usage: r12_plan_dump.py {before|after} [--all-bench] [query ...]")
-    tag = args[0]
-    names = args[1:]
+    args = sys.argv[1:]
+    if len(args) < 2 or args[1] not in ("before", "after"):
+        raise SystemExit(
+            "usage: plan_dump.py <round> {before|after} [--all-bench] [query ...]"
+        )
+    rnd, tag, names = args[0], args[1], args[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from etl_open_source_spark.registry import get_registry
@@ -41,8 +44,8 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
 
-    spark = get_spark(app_name="r12-plan-dump")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r12")
+    spark = get_spark(app_name=f"{rnd}-plan-dump")
+    out_dir = os.path.join(ROOT, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         # bench.py clearCache()s between samples — match those conditions so

@@ -955,21 +955,22 @@ def test_pq_train_k1_codebook_is_subspace_mean(spark):
 
 
 def test_word_shingles_precap_persist_equivalence(spark):
-    """r12 optimization: persist=True caches the PRE-cap explode (one
-    corpus scan instead of two) — the capped output must be identical to
-    the unpersisted path, and the cap must still drop hot shingles."""
+    """The doc-frequency cap drops exactly the hot shingles: the capped
+    output equals the uncapped shingles minus those in more than
+    ``max_doc_freq`` docs."""
     rows = [(i, "alpha beta gamma delta common common common") for i in range(8)]
     rows += [(100, "unique words only here nothing shared at all")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    spark.catalog.clearCache()
-    capped_p = D.word_shingles(df, "doc_id", "text", 3, max_doc_freq=5, persist=True)
-    capped = D.word_shingles(df, "doc_id", "text", 3, max_doc_freq=5, persist=False)
-    assert sorted(map(tuple, capped_p.collect())) == sorted(map(tuple, capped.collect()))
+
+    def shingles(**kw):
+        sh = D.word_shingles(df, "doc_id", "text", 3, **kw)
+        return sorted((r["id"], r["shingle"]) for r in sh.collect())
+
+    capped, uncapped = shingles(max_doc_freq=5), shingles()
     # the 8 duplicate docs share every shingle (df=8 > 5) -> all dropped;
     # the unique doc's shingles (df=1) survive
-    ids = {r["id"] for r in capped_p.collect()}
-    assert ids == {100}
-    spark.catalog.clearCache()
+    assert {i for i, _ in capped} == {100}
+    assert capped == [r for r in uncapped if r[0] == 100]
 
 
 def test_connected_components_sum_convergence_rounds(spark):
@@ -1103,6 +1104,37 @@ def test_brute_force_mapside_topk_prune(spark):
     )
     got_f = S.brute_force_topk(fids.filter(F.col("vec_id") < 2.0), fids, k=3).collect()
     assert len(got_f) == 6 and all(r.query_id != r.neighbor_id for r in got_f)
+    # (d) finite vectors near sqrt(DBL_MAX): usable norms, but the dot
+    # product overflows, so sims are +inf / -inf. Pruned (long ids) and
+    # unpruned (double ids) output must be equal.
+    x = [1.2509751493602063e154, 4.8244617372876466e153]
+    y = [1.2509751493602061e154, 4.824461737287649e153]
+    big = [(0, y), (1, x), (2, [-x[0], -x[1]])] + [(i, [1.0, i * 0.1]) for i in range(3, 20)]
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
+    try:
+        out = {}
+        for t in ("long", "double"):
+            df = spark.createDataFrame(
+                [(i if t == "long" else float(i), v) for i, v in big],
+                f"vec_id {t}, embedding array<double>",
+            )
+            out[t] = sorted(
+                (int(r.neighbor_id), r.sim, r.rank)
+                for r in S.brute_force_topk(df.filter(F.col("vec_id") == 0), df, k=3).collect()
+            )
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    assert out["long"] == out["double"] and out["long"][0][:2] == (1, math.inf)
+    # A NaN sim ranks first under sim DESC: the prune keeps it and counts
+    # it among the K best. Column 0 has fewer than K=3 numeric sims, so a
+    # threshold taken with NaN sorted last would be NaN and prune 0.7,
+    # which ranks third.
+    import numpy as np
+
+    nan = float("nan")
+    sims = np.array([[nan, 0.9], [nan, 0.5], [0.3, nan], [0.7, 0.1]])
+    keep = S._topk_keep_mask(sims, np.ones_like(sims, dtype=bool), 3, 0.0)
+    assert keep.tolist() == [[True, True], [True, True], [False, True], [True, False]]
 
 
 def test_operator_cache_ownership_release(spark, sf_dir):
@@ -1145,3 +1177,40 @@ def test_connected_components_rejects_noncastable_ids(spark):
     ok = spark.createDataFrame([("1", "2"), ("2", "3")], "id_a string, id_b string")
     got = {r.id: r.rep for r in D.connected_components(ok).collect()}
     assert got == {"1": "1", "2": "1", "3": "1"}
+
+
+def test_link_prediction_rounding_boundary(spark):
+    """The final filter is ROUND(jaccard, 6) >= t, so the prefix fraction
+    must come from t widened by the rounding half-band. N(100) = {1..5},
+    N(101) = {2..6}: J = 4/6 rounds to 0.666667 and passes t = 0.666667,
+    but the raw fraction 2t/(1+t) = 0.80000024 leaves node 100 a 1-element
+    prefix [1] that node 101 does not contain — the pair was never a
+    candidate. The widened fraction gives the prefix [1, 2]."""
+    from etl_open_source_spark.operators.graph import link_prediction_jaccard
+
+    edges = [(i, 100) for i in range(1, 6)] + [(i, 101) for i in range(2, 7)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {
+        (r.id_a, r.id_b): (r.common, r.jaccard)
+        for r in link_prediction_jaccard(df, threshold=0.666667).collect()
+    }
+    assert got[(100, 101)] == (4, 0.666667)
+
+
+@pytest.mark.parametrize("max_degree", [None, 4])
+def test_link_prediction_repeated_edges_count_once(spark, max_degree):
+    """N(v) is a set: an edge list with repeated edges scores exactly like
+    its de-duplicated form — common neighbours, degrees and the hub cap
+    all count distinct neighbours (node 1 has 9 edge rows but only 3
+    distinct neighbours, so a cap of 4 must not make it a hub)."""
+    from etl_open_source_spark.operators.graph import link_prediction_jaccard
+
+    simple = [(1, 2), (1, 3), (1, 4), (2, 5), (3, 5), (4, 6), (5, 7)]
+    multi = simple + [(1, 2), (1, 2), (1, 3), (1, 3), (1, 4), (1, 4), (2, 5), (5, 7)]
+
+    def rows(edges):
+        df = spark.createDataFrame(edges, "src long, dst long")
+        return sorted(map(tuple, link_prediction_jaccard(df, max_degree=max_degree).collect()))
+
+    expected = rows(simple)
+    assert expected and rows(multi) == expected

@@ -649,3 +649,22 @@ def test_sql_transform_pushdown_and_broadcasts(spark, sf_dir):
     assert plan.count("BroadcastHashJoin") >= 2
     assert "SortMergeJoin" not in plan
     assert "isnan" not in plan.lower()
+
+
+@pytest.mark.parametrize(
+    "name,n",
+    [
+        ("q_dedup_ngram", 7),
+        ("q_dedup_containment", 12),
+        ("q_graph_link_jaccard", 18),
+        ("q_dedup_near", 5),
+    ],
+)
+def test_set_similarity_join_exchange_counts(spark, sf_dir, name, n):
+    """The four set-similarity queries share one prefix-filter candidate
+    join and one array verify (operators/dedup.py::_prefix_candidates,
+    _verify_pairs). Their exchange counts are pinned at the values they
+    had before the shared primitive, so folding the copies into one
+    added no shuffle to any of them."""
+    plan = _formatted_plan(spark, sf_dir, name)
+    assert _n_exchanges(plan) == n, plan
